@@ -36,10 +36,15 @@ object Tables {
    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-      df.withColumn("ts", expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))
-    else df
+    if (name == "events") normalizeEventsTs(df) else df
   }
+
+  /** The `events.ts` normalization of [[load]], for any events frame
+   * (batch or streaming); a no-op once `ts` is a timestamp. */
+  def normalizeEventsTs(events: DataFrame): DataFrame =
+    if (events.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      events.withColumn("ts", expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))
+    else events
 
   /** Register all tables of a scale-factor dir as temp views. */
   def registerAll(spark: SparkSession, dir: String): Unit =

@@ -337,9 +337,7 @@ object CepQueries extends QueryPack {
                  H AS H.value >= 0.5,
                  L AS L.value < 0.5
         )"""
-      val batch = Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
+      val batch = StreamOps.evView(Tables.load(s, dir, "events")).toDF()
       graft.sqlx.MatchRecognize.runBatch(batch, mrSql, "event_id")
         .orderBy(col("click_id"))
     }),

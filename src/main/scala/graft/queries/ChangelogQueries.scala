@@ -47,8 +47,7 @@ object ChangelogQueries extends QueryPack {
     // snapshot commit. The gate reads the FINAL sink: latest image per
     // surviving key, deleted keys gone.
     "changelog_upsert_sink" -> ((s0, dir) => {
-      import java.nio.file.{Files, Paths}
-      import java.nio.file.attribute.FileTime
+      import java.nio.file.Files
       val s = graft.streaming.StreamOps.tuned(s0)
       val base = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_id"),
@@ -59,29 +58,10 @@ object ChangelogQueries extends QueryPack {
         .filter(col("user_id") % 7 === 0)
         .select(col("user_id"), lit(999999999999L).as("event_id"),
           lit(0L).as("cents"), lit(graft.changelog.RowKind.Delete).as("row_kind"))
-      // stage the two rounds as separately-timestamped files so the
-      // file source delivers them as ordered micro-batches
-      val work = Files.createTempDirectory("graft_upsert_src").toString
-      def stage(df: org.apache.spark.sql.DataFrame, mtimeMs: Long): Unit = {
-        def parquets(): Set[java.nio.file.Path] = {
-          val s = Files.list(Paths.get(work))
-          try {
-            import scala.jdk.CollectionConverters._
-            s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSet
-          } finally s.close()
-        }
-        val before = parquets()
-        df.coalesce(1).write.mode("append").parquet(work)
-        (parquets() -- before).foreach(p =>
-          Files.setLastModifiedTime(p, FileTime.fromMillis(mtimeMs)))
-      }
-      stage(cl, 10000L)
-      stage(dels, 20000L)
+      val work = graft.streaming.StreamOps.scratchDir("graft_upsert_src")
+      graft.streaming.StreamOps.stage(work, cl, dels)
       val sink = Files.createTempDirectory("graft_upsert_sink").toString
-      val sdf = s.readStream
-        .schema("user_id BIGINT, event_id BIGINT, cents BIGINT, row_kind STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$work/*.parquet")
+      val sdf = graft.streaming.StreamOps.readStaged(s, work, cl.schema)
       val q = sdf.writeStream
         .foreachBatch(graft.streaming.UpsertSink.foreachBatchUpsert(
           sink, keys = Seq("user_id"), seqCol = "event_id") _)

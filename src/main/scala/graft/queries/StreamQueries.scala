@@ -600,37 +600,14 @@ object StreamQueries extends QueryPack {
     // unless the per-key buffers round-tripped the checkpoint.
     "state_restart_topn" -> ((s0, dir) => {
       val s = StreamOps.tuned(s0)
-      import java.nio.file.{Files, Paths}
-      import java.nio.file.attribute.FileTime
-      import scala.jdk.CollectionConverters._
-      val work = Files.createTempDirectory("graft_rst_topn_work")
+      import java.nio.file.Files
+      val work = StreamOps.scratchDir("graft_rst_topn_work")
       val out = Files.createTempDirectory("graft_rst_topn_out").toString
       val ckpt = Files.createTempDirectory("graft_rst_topn_ckpt").toString
       val batch = s.read.parquet(s"$dir/events.parquet")
-      val tsIsLong = batch.schema("ts").dataType == org.apache.spark.sql.types.LongType
-      def stageHalf(par: Int, mtimeMs: Long): Unit = {
-        def list(): Set[java.nio.file.Path] = {
-          val st = Files.list(work)
-          try st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSet
-          finally st.close()
-        }
-        val before = list()
-        batch.filter(col("event_id") % 2 === par).coalesce(1)
-          .write.mode("append").parquet(work.toString)
-        (list() -- before).foreach(p =>
-          Files.setLastModifiedTime(p, FileTime.fromMillis(mtimeMs)))
-      }
+      def half(par: Int) = batch.filter(col("event_id") % 2 === par)
       def runOnce(): Unit = {
-        import s.implicits._
-        val sdf = s.readStream.schema(batch.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$work/*.parquet")
-        val norm =
-          if (tsIsLong) sdf.withColumn("ts",
-            expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))
-          else sdf
-        val ds = norm.select(col("event_id"), col("user_id"), col("event_type"),
-            unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
-          .as[Ev]
+        val ds = StreamOps.evView(StreamOps.readStaged(s, work, batch.schema))
         val updates = graft.api.StreamEnv.get(s).fromDataset(ds)
           .keyBy("event_type").topN("value", "event_id", n = 3).toDF()
         val q = updates.writeStream
@@ -644,8 +621,8 @@ object StreamQueries extends QueryPack {
           .start()
         q.awaitTermination()
       }
-      stageHalf(0, 10000L); runOnce() // phase 1, then the query STOPS
-      stageHalf(1, 20000L); runOnce() // restart from the same checkpoint
+      StreamOps.stage(work, half(0)); runOnce() // phase 1, then the query STOPS
+      StreamOps.stage(work, half(1)); runOnce() // restart from the same checkpoint
       val updates = s.read.parquet(out)
       val w = Window.partitionBy(col("event_type"))
         .orderBy(col("value").desc, col("event_id"))
@@ -673,25 +650,12 @@ object StreamQueries extends QueryPack {
     "state_rescale_totals" -> ((s0, dir) => {
       import java.nio.file.Files
       val out = Files.createTempDirectory("graft_rescale_out").toString
-      val batch = s0.read.parquet(s"$dir/events.parquet")
-      val tsIsLong = batch.schema("ts").dataType == org.apache.spark.sql.types.LongType
       // both rescale gates replay the same deterministic halves —
       // staged once per driver context (input staging, never results)
-      def stageHalf(par: Int): String = StreamOps.stagedEventsHalf(s0, dir, par)
-      def evStream(s: SparkSession, work: String) = {
-        import s.implicits._
-        val sdf = s.readStream.schema(batch.schema).parquet(s"$work/*.parquet")
-        val norm =
-          if (tsIsLong) sdf.withColumn("ts",
-            expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))
-          else sdf
-        norm.select(col("event_id"), col("user_id"), col("event_type"),
-            unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
-          .as[Ev]
-      }
-      def runPhase(s: SparkSession, work: String, ckpt: String,
+      def runPhase(s: SparkSession, par: Int, ckpt: String,
           seed: org.apache.spark.sql.Dataset[graft.streaming.BootTotal]): Unit = {
-        val updates = graft.streaming.Rescale.resumeTotals(evStream(s, work), seed).toDF()
+        val updates = graft.streaming.Rescale.resumeTotals(
+          StreamOps.eventsTypedHalf(s, dir, par), seed).toDF()
         val q = updates.writeStream
           .foreachBatch {
             (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -715,11 +679,11 @@ object StreamQueries extends QueryPack {
       val ckpt1 = Files.createTempDirectory("graft_rescale_ck1").toString
       locally {
         import s1.implicits._
-        runPhase(s1, stageHalf(0), ckpt1, s1.emptyDataset[graft.streaming.BootTotal])
+        runPhase(s1, 0, ckpt1, s1.emptyDataset[graft.streaming.BootTotal])
       }
       val s2 = rocks(StreamOps.tuned(s0, 7))
       val ckpt2 = Files.createTempDirectory("graft_rescale_ck2").toString
-      runPhase(s2, stageHalf(1), ckpt2,
+      runPhase(s2, 1, ckpt2,
         graft.streaming.Rescale.savepointTotals(s2, ckpt1))
       val updates = s0.read.parquet(out)
       val w = Window.partitionBy(col("user_id")).orderBy(col("n").desc)
@@ -744,25 +708,12 @@ object StreamQueries extends QueryPack {
     "state_rescale_topn" -> ((s0, dir) => {
       import java.nio.file.Files
       val out = Files.createTempDirectory("graft_rescale_topn_out").toString
-      val batch = s0.read.parquet(s"$dir/events.parquet")
-      val tsIsLong = batch.schema("ts").dataType == org.apache.spark.sql.types.LongType
       // shared with state_rescale_totals: same deterministic halves,
       // staged once per driver context (input staging, never results)
-      def stageHalf(par: Int): String = StreamOps.stagedEventsHalf(s0, dir, par)
-      def evStream(s: SparkSession, work: String) = {
-        import s.implicits._
-        val sdf = s.readStream.schema(batch.schema).parquet(s"$work/*.parquet")
-        val norm =
-          if (tsIsLong) sdf.withColumn("ts",
-            expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))
-          else sdf
-        norm.select(col("event_id"), col("user_id"), col("event_type"),
-            unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
-          .as[Ev]
-      }
-      def runPhase(s: SparkSession, work: String, ckpt: String,
+      def runPhase(s: SparkSession, par: Int, ckpt: String,
           seed: org.apache.spark.sql.Dataset[graft.streaming.TopNBuf]): Unit = {
-        val updates = graft.streaming.Rescale.resumeTopN(evStream(s, work), seed).toDF()
+        val updates = graft.streaming.Rescale.resumeTopN(
+          StreamOps.eventsTypedHalf(s, dir, par), seed).toDF()
         val q = updates.writeStream
           .foreachBatch {
             (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -783,11 +734,11 @@ object StreamQueries extends QueryPack {
       val ckpt1 = Files.createTempDirectory("graft_rescale_tn_ck1").toString
       locally {
         import s1.implicits._
-        runPhase(s1, stageHalf(0), ckpt1, s1.emptyDataset[graft.streaming.TopNBuf])
+        runPhase(s1, 0, ckpt1, s1.emptyDataset[graft.streaming.TopNBuf])
       }
       val s2 = rocks(StreamOps.tuned(s0, 7))
       val ckpt2 = Files.createTempDirectory("graft_rescale_tn_ck2").toString
-      runPhase(s2, stageHalf(1), ckpt2,
+      runPhase(s2, 1, ckpt2,
         graft.streaming.Rescale.savepointTopN(s2, ckpt1))
       val updates = s0.read.parquet(out)
       val w = Window.partitionBy(col("event_type"))
@@ -815,39 +766,23 @@ object StreamQueries extends QueryPack {
     "stream_watermark_idleness" -> ((s0, dir) => {
       val s = StreamOps.tuned(s0)
       s.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "max")
-      import java.nio.file.{Files, Paths}
-      import java.nio.file.attribute.FileTime
-      import scala.jdk.CollectionConverters._
-      val liveDir = Files.createTempDirectory("graft_wmidle_live")
-      val idleDir = Files.createTempDirectory("graft_wmidle_idle")
+      val liveDir = StreamOps.scratchDir("graft_wmidle_live")
+      val idleDir = StreamOps.scratchDir("graft_wmidle_idle")
       val ev = graft.Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts").cast("timestamp")).as("ts_us"),
           floor(col("value") * 100).cast("long").as("cents"))
       val minUs = ev.agg(min(col("ts_us"))).head().getLong(0)
-      def stageTo(work: java.nio.file.Path, df: DataFrame, mtimeMs: Long): Unit = {
-        def list(): Set[java.nio.file.Path] = {
-          val st = Files.list(work)
-          try st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSet
-          finally st.close()
-        }
-        val before = list()
-        df.coalesce(1).write.mode("append").parquet(work.toString)
-        (list() -- before).foreach(p =>
-          Files.setLastModifiedTime(p, FileTime.fromMillis(mtimeMs)))
-      }
-      stageTo(liveDir, ev.filter(col("user_id") % 2 === 0), 10000L)
-      // the live leg's far-future flush row (its own window never
-      // closes, so it is self-excluding from the append image)
-      stageTo(liveDir, s.range(1).select(lit(-1L).as("event_id"),
-        lit(-1L).as("user_id"), lit(7258118400000000L).as("ts_us"),
-        lit(0L).as("cents")), 20000L)
+      StreamOps.stage(liveDir, ev.filter(col("user_id") % 2 === 0),
+        // the live leg's far-future flush row (its own window never
+        // closes, so it is self-excluding from the append image)
+        s.range(1).select(lit(-1L).as("event_id"), lit(-1L).as("user_id"),
+          lit(7258118400000000L).as("ts_us"), lit(0L).as("cents")))
       // the idle leg: 30 minutes of odd-user rows, then silence forever
-      stageTo(idleDir, ev.filter(col("user_id") % 2 === 1 &&
-        col("ts_us") < minUs + 1800L * 1000000), 10000L)
+      StreamOps.stage(idleDir, ev.filter(col("user_id") % 2 === 1 &&
+        col("ts_us") < minUs + 1800L * 1000000))
       def leg(work: java.nio.file.Path): DataFrame =
-        s.readStream.schema("event_id BIGINT, user_id BIGINT, ts_us BIGINT, cents BIGINT")
-          .option("maxFilesPerTrigger", "1").parquet(s"$work/*.parquet")
+        StreamOps.readStaged(s, work, ev.schema)
           .withColumn("ets", timestamp_micros(col("ts_us")))
           .withWatermark("ets", "0 seconds")
       val agg = leg(liveDir).union(leg(idleDir))
@@ -1684,8 +1619,6 @@ object StreamQueries extends QueryPack {
     "stream_broadcast_threshold" -> ((s0, dir) => {
       val s = StreamOps.tuned(s0)
       import s.implicits._
-      import java.nio.file.{Files, Paths}
-      import java.nio.file.attribute.FileTime
       val ev = graft.Tables.load(s, dir, "events")
       val controls = ev.groupBy(col("event_type"))
         .agg(sum(floor(col("value") * 100).cast("bigint")).as("sc"), count(lit(1)).as("n"))
@@ -1697,45 +1630,19 @@ object StreamQueries extends QueryPack {
         lit(0.0).as("threshold"), col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("ts_us"),
         floor(col("value") * 100).cast("double").as("value"))
-      val work = Files.createTempDirectory("graft_bcast")
-      def listAll(): Set[java.nio.file.Path] = {
-        val st = Files.list(work)
-        try {
-          val it = st.iterator(); val b = Set.newBuilder[java.nio.file.Path]
-          while (it.hasNext) b += it.next()
-          b.result()
-        } finally st.close()
-      }
-      def stage(df: org.apache.spark.sql.DataFrame, mtime: Long): Unit = {
-        val seen = listAll()
-        df.coalesce(1).write.mode("append").parquet(work.toString)
-        (listAll() -- seen).foreach { p =>
-          if (p.toString.endsWith(".parquet"))
-            Files.setLastModifiedTime(p, FileTime.fromMillis(mtime))
-        }
-      }
-      try {
-        stage(controls, 10000L)
-        stage(data, 20000L)
-        // control-before-data relies on FileStreamSource consuming files
-        // in modification-time order under maxFilesPerTrigger=1 — the
-        // documented latestFirst=false default sorts pending files by
-        // mtime, which the two stage() calls set explicitly (10s < 20s).
-        val tagged = s.readStream.schema(controls.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$work/*.parquet")
-          .as[graft.streaming.Tagged]
-        val out = graft.streaming.StatefulOps.thresholdFilter(tagged)
-        StreamOps.runToBatch(s, out.toDF(), "append", "stream_bcast")
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value").cast("bigint").as("cents"))
-          .orderBy(col("event_id"))
-      } finally {
-        // the memory sink has consumed all input (or the run threw) —
-        // drop the staging dir either way so it never accumulates
-        val all = listAll().toSeq.sortBy(_.toString).reverse
-        all.foreach(p => try Files.deleteIfExists(p) catch { case _: Exception => () })
-        try Files.deleteIfExists(work) catch { case _: Exception => () }
-      }
+      val work = StreamOps.scratchDir("graft_bcast")
+      StreamOps.stage(work, controls, data)
+      // control-before-data relies on FileStreamSource consuming files
+      // in modification-time order under maxFilesPerTrigger=1 — the
+      // documented latestFirst=false default sorts pending files by
+      // mtime, and stage() times each file after the one before.
+      val tagged = StreamOps.readStaged(s, work, controls.schema)
+        .as[graft.streaming.Tagged]
+      val out = graft.streaming.StatefulOps.thresholdFilter(tagged)
+      StreamOps.runToBatch(s, out.toDF(), "append", "stream_bcast")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("value").cast("bigint").as("cents"))
+        .orderBy(col("event_id"))
     }),
 
     // Window COUNT EVICTOR (reference CountEvictor via

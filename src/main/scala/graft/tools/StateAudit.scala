@@ -42,39 +42,14 @@ object StateAudit {
     // the events table staged as 8 time-ordered files so the file
     // source (maxFilesPerTrigger=1) advances the watermark per batch
     def slicedEvents(slices: Int = 8): org.apache.spark.sql.Dataset[Ev] = {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
-      val work = Files.createTempDirectory("graft_audit_events")
-      val batch = spark.read.parquet(s"$sfDir/events.parquet")
-      val tsIsLong = batch.schema("ts").dataType == org.apache.spark.sql.types.LongType
-      val norm =
-        if (tsIsLong) batch.withColumn("ts",
-          expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))
-        else batch
-      val ev = norm.select(col("event_id"), col("user_id"), col("event_type"),
-        unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
+      val ev = StreamOps.evView(spark.read.parquet(s"$sfDir/events.parquet")).toDF()
       val bounds = ev.stat.approxQuantile("ts_us",
         (1 until slices).map(_.toDouble / slices).toArray, 0.001)
       val cuts = (Long.MinValue +: bounds.map(_.toLong)) :+ Long.MaxValue
-      cuts.sliding(2).zipWithIndex.foreach { case (pair, i) =>
-        val (lo, hi) = (pair(0), pair(1))
-        import scala.jdk.CollectionConverters._
-        val before = {
-          val s0 = Files.list(work)
-          try s0.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSet
-          finally s0.close()
-        }
-        ev.filter(col("ts_us") >= lo && col("ts_us") < hi)
-          .coalesce(1).write.mode("append").parquet(work.toString)
-        val s1 = Files.list(work)
-        val now = try s1.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSet
-        finally s1.close()
-        (now -- before).foreach(p =>
-          Files.setLastModifiedTime(p, FileTime.fromMillis(10000L + i * 1000)))
-      }
-      spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$work/*.parquet")
-        .as[Ev]
+      val work = StreamOps.scratchDir("graft_audit_events")
+      StreamOps.stage(work, cuts.toSeq.sliding(2).map(c =>
+        ev.filter(col("ts_us") >= c(0) && col("ts_us") < c(1))).toSeq: _*)
+      StreamOps.readStaged(spark, work, ev.schema).as[Ev]
     }
 
     def runWithCkpt(df: DataFrame, mode: String, name: String): String = {
