@@ -20,12 +20,26 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Session config every entry point should use. Matches the oracle:
-   * UTC session time zone, nanos parquet readable, AQE on. */
+   * UTC session time zone, nanos parquet readable, AQE on.
+   *
+   * It also removes two fixed costs per session clone and per checkpoint
+   * file. Artifact isolation is off: with it, every `newSession()` clone
+   * (one per stream gate, `StreamOps.tuned`) gets its own executor
+   * classloader, and the codegen cache, keyed on classloader and code,
+   * recompiles every class for it. The engine adds no session-scoped
+   * artifacts (`ADD JAR` goes through `SparkContext.addJar`). The cache
+   * holds 1000 classes: a whole gate family needs up to ~360, and at the
+   * default 100 every repeat misses. `file:` paths use the classes in
+   * `LocalFs.scala`, which start no `chmod`/`readlink` process per file. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    .config("spark.sql.artifact.isolation.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
+    .config("spark.hadoop.fs.file.impl", classOf[LocalFileSystemNoFork].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFsNoFork].getName)
 
   /**
    * Load one table. `events.ts` is stored as parquet TIMESTAMP(NANOS)

@@ -47,7 +47,6 @@ object ChangelogQueries extends QueryPack {
     // snapshot commit. The gate reads the FINAL sink: latest image per
     // surviving key, deleted keys gone.
     "changelog_upsert_sink" -> ((s0, dir) => {
-      import java.nio.file.Files
       val s = graft.streaming.StreamOps.tuned(s0)
       val base = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_id"),
@@ -60,7 +59,7 @@ object ChangelogQueries extends QueryPack {
           lit(0L).as("cents"), lit(graft.changelog.RowKind.Delete).as("row_kind"))
       val work = graft.streaming.StreamOps.scratchDir("graft_upsert_src")
       graft.streaming.StreamOps.stage(work, cl, dels)
-      val sink = Files.createTempDirectory("graft_upsert_sink").toString
+      val sink = graft.streaming.StreamOps.scratchDir("graft_upsert_sink").toString
       val sdf = graft.streaming.StreamOps.readStaged(s, work, cl.schema)
       val q = sdf.writeStream
         .foreachBatch(graft.streaming.UpsertSink.foreachBatchUpsert(

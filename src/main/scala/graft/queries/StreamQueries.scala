@@ -226,8 +226,8 @@ object StreamQueries extends QueryPack {
     // both fan-out legs are oracle-checked.
     "multi_sink_fanout" -> ((s0, dir) => {
       val s = StreamOps.tuned(s0)
-      val outA = java.nio.file.Files.createTempDirectory("graft_msink_a").toString
-      val outB = java.nio.file.Files.createTempDirectory("graft_msink_b").toString
+      val outA = StreamOps.scratchDir("graft_msink_a").toString
+      val outB = StreamOps.scratchDir("graft_msink_b").toString
       val shared = StreamOps.readStream(s, dir, "events")
         .filter(col("value") >= 0.1)
         .select(col("event_type"), col("user_id"),
@@ -600,10 +600,9 @@ object StreamQueries extends QueryPack {
     // unless the per-key buffers round-tripped the checkpoint.
     "state_restart_topn" -> ((s0, dir) => {
       val s = StreamOps.tuned(s0)
-      import java.nio.file.Files
       val work = StreamOps.scratchDir("graft_rst_topn_work")
-      val out = Files.createTempDirectory("graft_rst_topn_out").toString
-      val ckpt = Files.createTempDirectory("graft_rst_topn_ckpt").toString
+      val out = StreamOps.scratchDir("graft_rst_topn_out").toString
+      val ckpt = StreamOps.scratchDir("graft_rst_topn_ckpt").toString
       val batch = s.read.parquet(s"$dir/events.parquet")
       def half(par: Int) = batch.filter(col("event_id") % 2 === par)
       def runOnce(): Unit = {
@@ -648,8 +647,7 @@ object StreamQueries extends QueryPack {
     // RescaleSpec pins the physical movement itself (keys provably
     // spread over more partitions after the resume).
     "state_rescale_totals" -> ((s0, dir) => {
-      import java.nio.file.Files
-      val out = Files.createTempDirectory("graft_rescale_out").toString
+      val out = StreamOps.scratchDir("graft_rescale_out").toString
       // both rescale gates replay the same deterministic halves —
       // staged once per driver context (input staging, never results)
       def runPhase(s: SparkSession, par: Int, ckpt: String,
@@ -676,13 +674,13 @@ object StreamQueries extends QueryPack {
         s
       }
       val s1 = rocks(StreamOps.tuned(s0, 3))
-      val ckpt1 = Files.createTempDirectory("graft_rescale_ck1").toString
+      val ckpt1 = StreamOps.scratchDir("graft_rescale_ck1").toString
       locally {
         import s1.implicits._
         runPhase(s1, 0, ckpt1, s1.emptyDataset[graft.streaming.BootTotal])
       }
       val s2 = rocks(StreamOps.tuned(s0, 7))
-      val ckpt2 = Files.createTempDirectory("graft_rescale_ck2").toString
+      val ckpt2 = StreamOps.scratchDir("graft_rescale_ck2").toString
       runPhase(s2, 1, ckpt2,
         graft.streaming.Rescale.savepointTotals(s2, ckpt1))
       val updates = s0.read.parquet(out)
@@ -706,8 +704,7 @@ object StreamQueries extends QueryPack {
     // whole-stream batch Top-N oracle, impossible unless every key's
     // buffer crossed the 3→7 redistribution intact.
     "state_rescale_topn" -> ((s0, dir) => {
-      import java.nio.file.Files
-      val out = Files.createTempDirectory("graft_rescale_topn_out").toString
+      val out = StreamOps.scratchDir("graft_rescale_topn_out").toString
       // shared with state_rescale_totals: same deterministic halves,
       // staged once per driver context (input staging, never results)
       def runPhase(s: SparkSession, par: Int, ckpt: String,
@@ -731,13 +728,13 @@ object StreamQueries extends QueryPack {
         s
       }
       val s1 = rocks(StreamOps.tuned(s0, 3))
-      val ckpt1 = Files.createTempDirectory("graft_rescale_tn_ck1").toString
+      val ckpt1 = StreamOps.scratchDir("graft_rescale_tn_ck1").toString
       locally {
         import s1.implicits._
         runPhase(s1, 0, ckpt1, s1.emptyDataset[graft.streaming.TopNBuf])
       }
       val s2 = rocks(StreamOps.tuned(s0, 7))
-      val ckpt2 = Files.createTempDirectory("graft_rescale_tn_ck2").toString
+      val ckpt2 = StreamOps.scratchDir("graft_rescale_tn_ck2").toString
       runPhase(s2, 1, ckpt2,
         graft.streaming.Rescale.savepointTopN(s2, ckpt1))
       val updates = s0.read.parquet(out)

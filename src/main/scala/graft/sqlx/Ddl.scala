@@ -1431,7 +1431,7 @@ object Ddl {
           // own loud append-mode error.
           require(!verb.equalsIgnoreCase("OVERWRITE"),
             s"INSERT OVERWRITE $target: streaming overwrite is not supported")
-          val ckpt = java.nio.file.Files.createTempDirectory("graft_sset_ck").toString
+          val ckpt = graft.streaming.StreamOps.scratchDir("graft_sset_ck").toString
           val q = df.writeStream
             .outputMode("append")
             .foreachBatch((b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],

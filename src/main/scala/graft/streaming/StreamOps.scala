@@ -155,11 +155,15 @@ object StreamOps {
         unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
       .as(Encoders.product[Ev])
 
-  /** A cloned session with fewer shuffle/state partitions: at test
-   * scale every micro-batch pays per-partition state-store I/O, so 8
-   * partitions cuts that 4× vs the batch-tuned 32. On a real cluster
-   * the cluster default stays in force (this is a session-local knob,
-   * not a code-path difference). */
+  /** A cloned session with its own shuffle/state partition count
+   * (default 8): at test scale every micro-batch pays per-partition
+   * state-store I/O, so a stream gate runs at a fixed, small width
+   * whatever the batch session's width (`SPARK_GRAFT_CPUS` in the
+   * drivers, `nproc` in perfbench). On a real cluster the cluster
+   * default stays in force (this is a session-local knob, not a
+   * code-path difference). Clones share the JVM's compiled classes: a
+   * generated class compiled for one gate is reused by every later
+   * clone (see `Tables.configure`). */
   def tuned(spark: SparkSession, partitions: Int = 8): SparkSession = {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", partitions.toString)

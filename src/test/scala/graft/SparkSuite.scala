@@ -30,4 +30,20 @@ object SparkSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false"))
     .getOrCreate()
+
+  /** A scratch dir holding a generated `events.parquet`, one file with
+   * the events table's columns, for specs that stream it through
+   * `StreamOps.readStream`. */
+  lazy val eventsDir: String = {
+    val dir = graft.streaming.StreamOps.scratchDir("graft_spec_events")
+    val out = dir.resolve("write")
+    session.range(5000).selectExpr("id AS event_id", "id % 97 AS user_id",
+        "element_at(array('view', 'click', 'buy'), CAST(id % 3 AS INT) + 1) AS event_type",
+        "timestamp_seconds(1700000000 + id * 7) AS ts", "(id % 1000) / 10.0 AS value")
+      .coalesce(1).write.parquet(out.toString)
+    val files = java.nio.file.Files.list(out)
+    val part = try files.filter(_.toString.endsWith(".parquet")).findFirst().get finally files.close()
+    java.nio.file.Files.move(part, dir.resolve("events.parquet"))
+    dir.toString
+  }
 }
