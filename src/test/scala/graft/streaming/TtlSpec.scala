@@ -48,7 +48,7 @@ class TtlSpec extends SparkSuite {
     val ms = MemoryStream[Ev]
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ttl").toString
     val q = StatefulOps.keepLastBy(ms.toDS(), "user_id", "ts_us", "event_id",
-        ttl = Some("100 milliseconds")).toDF()
+        ttl = Some("1 second")).toDF()
       .writeStream.format("memory").queryName("t_ttl").outputMode("update")
       .option("checkpointLocation", ckpt).start()
     try {
@@ -56,8 +56,11 @@ class TtlSpec extends SparkSuite {
       eventually("both rows emitted") {
         assert(spark.table("t_ttl").count() == 2)
       }
-      Thread.sleep(300) // let both keys' TTL timers expire
-      // key 2 stays active (every nudge row re-arms its timer); key 1
+      Thread.sleep(1300) // let both keys' TTL timers expire
+      // key 2 stays active (every nudge row re-arms its timer; one poll
+      // iteration, a nudge and a state-store read, stays well inside
+      // the TTL, while timer-check micro-batches can run back to back
+      // between two nudges); key 1
       // stays idle and is timed out. The nudges also make the check
       // independent of empty-batch scheduling: timeouts are processed
       // in DATA batches too, so each poll iteration forces a batch that
